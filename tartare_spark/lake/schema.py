@@ -39,3 +39,9 @@ RAW_LAKE_SCHEMA = StructType(
         StructField("_bucket", IntegerType(), True),
     ]
 )
+
+# columns stored in the data files: ``_bucket`` is a directory partition
+# (``_bucket=<k>/``), recomputed from the key when a reader needs it
+PHYS_LAKE_SCHEMA = StructType(
+    [f for f in RAW_LAKE_SCHEMA.fields if f.name != "_bucket"]
+)

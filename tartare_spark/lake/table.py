@@ -55,12 +55,15 @@ import json
 import logging
 import os
 import shutil
+import threading
 import time
 import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tartare_spark.lake.schema import PHYS_LAKE_SCHEMA, RAW_LAKE_SCHEMA
 
 logger = logging.getLogger(__name__)
 
@@ -91,9 +94,64 @@ def bucket_expr(num_buckets: int):
     )
 
 
+def _scan(spark: SparkSession, files: list[str]) -> DataFrame:
+    """One scan of manifest-listed data files with the lake's physical
+    schema pinned: Spark runs no footer-reading schema-inference job,
+    and (with the session's partition-discovery threshold, see
+    ``get_spark``) no file-listing job — the manifest already is the
+    file list."""
+    return spark.read.schema(PHYS_LAKE_SCHEMA).parquet(*files)
+
+
+def _tag_commits(
+    spark: SparkSession, commit_files: list[tuple[int, int, list[str]]]
+) -> DataFrame:
+    """Change-feed rows of several commits as ONE scan: every file of
+    every ``(version, batch_id, files)`` commit is read together and
+    tagged with its commit's ``_commit_version``/``_batch_id`` through a
+    literal map keyed by the commit's data directory
+    (``delta-<id>-<hex>`` / ``cdc-<id>-<hex>``: each commit writes its
+    own, so the name identifies the commit). The directory name is
+    taken from ``_metadata.file_path`` (a URI — percent-encoding can
+    only touch the lake root, never this generated name). The read's
+    job count does not grow with the number of commits."""
+    version_of: list = []
+    batch_of: list = []
+    files: list[str] = []
+    for v, batch_id, fl in commit_files:
+        # <root>/data/<dir>/_bucket=<k>/<file>.parquet → <dir>
+        dirs = {os.path.basename(os.path.dirname(os.path.dirname(f))) for f in fl}
+        for d in sorted(dirs):
+            version_of += [F.lit(d), F.lit(v)]
+            batch_of += [F.lit(d), F.lit(batch_id)]
+        files.extend(fl)
+    if not files:
+        return (
+            spark.createDataFrame([], PHYS_LAKE_SCHEMA)
+            .withColumn("_commit_version", F.lit(0))
+            .withColumn("_batch_id", F.lit(0))
+        )
+    d = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -3)
+    out = (
+        _scan(spark, files)
+        .withColumn("_commit_version", F.create_map(*version_of)[d])
+        .withColumn("_batch_id", F.create_map(*batch_of)[d])
+    )
+    if len(commit_files) > 1:
+        # rows in commit order, as consumers that replay the collected
+        # feed in order expect; Catalyst drops this sort under
+        # order-insensitive consumers (count, distinct and other
+        # aggregates), so they pay nothing for it
+        out = out.orderBy("_commit_version")
+    return out
+
+
 class LakeTable:
     def __init__(self, root: str):
         self.root = root
+        # the foreachBatch thread and the maintenance thread
+        # (submit_compaction) both append to the metrics log
+        self._metrics_lock = threading.Lock()
         with open(os.path.join(root, "_table.json")) as f:
             meta = json.load(f)
         self.num_buckets: int = meta["num_buckets"]
@@ -573,7 +631,12 @@ class LakeTable:
         (the overwhelming majority between compactions at scale — e.g.
         1 % dirty on a 100 TB table) are scanned straight through with
         no shuffle at all. A point lookup whose bucket is clean is a
-        pure pruned scan."""
+        pure pruned scan.
+
+        Files come from the manifest, never from a directory listing,
+        and are scanned with the lake's physical schema pinned: at most
+        two scans (dirty, clean), and no schema-inference or listing
+        job before the read's own."""
         m = self.manifest(version)
         layout = int(m.get("num_buckets", self.num_buckets))
         dirty = {b for b, fl in m.get("deltas", {}).items() if fl}
@@ -591,8 +654,6 @@ class LakeTable:
             dirty_want, kind="deltas", manifest=m
         )
         if not clean_files and not dirty_files:
-            from tartare_spark.lake.schema import RAW_LAKE_SCHEMA
-
             df = spark.createDataFrame([], RAW_LAKE_SCHEMA)
             return df if with_bucket else df.drop("_bucket")
         frames = []
@@ -605,13 +666,13 @@ class LakeTable:
             # over the DIRTY buckets' rows only.
             frames.append(
                 dedup_latest_lsn(
-                    spark.read.parquet(*dirty_files),
+                    _scan(spark, dirty_files),
                     keys=["repo", "path"],
                     order_col="_lsn",
                 )
             )
         if clean_files:
-            frames.append(spark.read.parquet(*clean_files))
+            frames.append(_scan(spark, clean_files))
         df = frames[0]
         for extra in frames[1:]:
             df = df.unionByName(extra)
@@ -661,7 +722,11 @@ class LakeTable:
         downstream consumers can resume by version. In MOR mode each
         commit's delta files contain exactly the deduped changed rows,
         so this is a pure metadata-pruned file read — cost O(changed
-        rows), the table itself is never scanned. Maintenance commits
+        rows), the table itself is never scanned. The read is planned
+        from the manifests as ONE scan of every new file in the range,
+        physical schema pinned, so its Spark job count stays constant
+        however many commits the range spans; rows come in commit
+        order. Maintenance commits
         (compaction: batch_id unchanged from parent) rewrite state
         without changing it and are skipped. In CoW mode each commit
         records its deduped changes as SIDECAR files (the apply already
@@ -714,7 +779,7 @@ class LakeTable:
                 .withColumn("_commit_version", F.lit(to_version))
                 .withColumn("_batch_id", F.lit(int(self.manifest(to_version)["batch_id"])))
             )
-        frames = []
+        commits = []
         prev = self.manifest(from_version)
         # carry the seen-file set forward incrementally: rebuilding it
         # from each full manifest would be O(versions × total files) of
@@ -742,24 +807,8 @@ class LakeTable:
                 continue  # compaction/maintenance: no logical change
             prev_batch = m["batch_id"]
             if new_files:
-                frames.append(
-                    spark.read.parquet(*new_files)
-                    .withColumn("_commit_version", F.lit(v))
-                    .withColumn("_batch_id", F.lit(int(m["batch_id"])))
-                )
-        if not frames:
-            from tartare_spark.lake.schema import RAW_LAKE_SCHEMA
-
-            return (
-                spark.createDataFrame([], RAW_LAKE_SCHEMA)
-                .drop("_bucket")
-                .withColumn("_commit_version", F.lit(0))
-                .withColumn("_batch_id", F.lit(0))
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+                commits.append((v, int(m["batch_id"]), new_files))
+        return _tag_commits(spark, commits)
 
     def _changes_from_sidecars(
         self, spark: SparkSession, from_version: int, to_version: int
@@ -768,7 +817,7 @@ class LakeTable:
         changed-key sidecar files. Returns None when any non-maintenance
         commit in the range predates sidecars (caller falls back to the
         snapshot diff)."""
-        frames = []
+        commits = []
         prev_batch = self.manifest(from_version)["batch_id"]
         for v in range(from_version + 1, to_version + 1):
             m = self.manifest(v)
@@ -778,24 +827,8 @@ class LakeTable:
             if "changelog" not in m:
                 return None  # legacy commit — sidecars unavailable
             if m["changelog"]:
-                frames.append(
-                    spark.read.parquet(*m["changelog"])
-                    .withColumn("_commit_version", F.lit(v))
-                    .withColumn("_batch_id", F.lit(int(m["batch_id"])))
-                )
-        if not frames:
-            from tartare_spark.lake.schema import RAW_LAKE_SCHEMA
-
-            return (
-                spark.createDataFrame([], RAW_LAKE_SCHEMA)
-                .drop("_bucket")
-                .withColumn("_commit_version", F.lit(0))
-                .withColumn("_batch_id", F.lit(0))
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+                commits.append((v, int(m["batch_id"]), m["changelog"]))
+        return _tag_commits(spark, commits)
 
     def stream_changes(self, spark: SparkSession) -> DataFrame:
         """The lake as a STREAMING source: tail the per-commit MOR delta
@@ -816,10 +849,6 @@ class LakeTable:
         to cover your slowest consumer)."""
         if self.mode != "mor":
             raise ValueError("stream_changes() requires merge-on-read mode")
-        from tartare_spark.lake.schema import RAW_LAKE_SCHEMA
-        from pyspark.sql.types import StructType
-
-        phys = StructType([f for f in RAW_LAKE_SCHEMA.fields if f.name != "_bucket"])
         # Glob all the way to leaf FILES: a directory glob would run
         # partition discovery per delta dir and reject the layout as
         # conflicting roots. ignoreMissingFiles lets a lagging consumer
@@ -830,7 +859,7 @@ class LakeTable:
         # match the glob: their rows are verbatim duplicates of the
         # redelivered batch, which the downstream LWW apply dedups.
         return (
-            spark.readStream.schema(phys)
+            spark.readStream.schema(PHYS_LAKE_SCHEMA)
             .option("ignoreMissingFiles", "true")
             .parquet(os.path.join(self.root, "data", "delta-*", "_bucket=*", "*.parquet"))
         )
@@ -960,48 +989,6 @@ class LakeTable:
                 schema_version=schema_version,
                 extra_stats=extra_stats,
                 changelog=sorted(changelog_files) if changelog_files else None,
-            )
-
-        self._publish_writer_commit(_attempt)
-        return True
-
-    def commit_delta(
-        self,
-        staged_phys: DataFrame,
-        batch_id: int,
-        touched_buckets: list[int],
-        bucket_lsn_updates: dict[int, int],
-        schema_version: int | None = None,
-        extra_stats: dict | None = None,
-    ) -> bool:
-        """Merge-on-read commit: APPEND the batch's deduped physical rows
-        (one per key, tombstones included) as per-bucket delta files. No
-        existing file is read or rewritten — per-batch write cost is
-        O(batch), independent of table size. Idempotent by batch_id."""
-        if batch_id <= self.last_batch_id():
-            return False
-        self._assert_layout(self.manifest())
-
-        new_files = self._write_data_files(
-            staged_phys, f"delta-{batch_id}-{uuid.uuid4().hex[:8]}",
-            len(touched_buckets), blooms=False, codec="lz4",
-        )
-
-        def _attempt():
-            prev = self.manifest()
-            deltas = {k: list(v) for k, v in prev.get("deltas", {}).items()}
-            for b in touched_buckets:
-                deltas.setdefault(str(b), []).extend(
-                    sorted(new_files.get(b, []))
-                )
-            self._publish(
-                prev,
-                batch_id=batch_id,
-                files=dict(prev["files"]),
-                deltas=deltas,
-                bucket_lsn_updates=bucket_lsn_updates,
-                schema_version=schema_version,
-                extra_stats=extra_stats,
             )
 
         self._publish_writer_commit(_attempt)
@@ -1446,19 +1433,15 @@ class LakeTable:
 
             frames.append(
                 dedup_latest_lsn(
-                    spark.read.parquet(*dirty_files),
+                    _scan(spark, dirty_files),
                     keys=["repo", "path"],
                     order_col="_lsn",
                 ).filter(residual)
             )
         if kept:
-            frames.append(spark.read.parquet(*kept).filter(residual))
+            frames.append(_scan(spark, kept).filter(residual))
         if not frames:
-            from tartare_spark.lake.schema import RAW_LAKE_SCHEMA
-
-            frames = [
-                spark.createDataFrame([], RAW_LAKE_SCHEMA).drop("_bucket")
-            ]
+            frames = [spark.createDataFrame([], PHYS_LAKE_SCHEMA)]
         df = frames[0]
         for extra in frames[1:]:
             df = df.unionByName(extra)
@@ -1825,8 +1808,15 @@ class LakeTable:
         return out
 
     def append_metrics(self, record: dict) -> None:
-        with open(os.path.join(self.root, "_metrics", "metrics.jsonl"), "a") as f:
-            f.write(json.dumps(record) + "\n")
+        """Append one record to the metrics log. Writers on different
+        threads (the foreachBatch thread, the maintenance thread) are
+        serialized so every line stays whole."""
+        line = json.dumps(record) + "\n"
+        with self._metrics_lock:
+            with open(
+                os.path.join(self.root, "_metrics", "metrics.jsonl"), "a"
+            ) as f:
+                f.write(line)
 
     def metrics(self) -> list[dict]:
         p = os.path.join(self.root, "_metrics", "metrics.jsonl")

@@ -37,6 +37,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tartare_spark.lake.schema import CHANGE_EVENT_SCHEMA
 from tartare_spark.lake.table import LakeTable, bucket_expr
 from tartare_spark.operators.dedup import dedup_latest_lsn
 from tartare_spark.operators.merge import merge_upserts
@@ -44,6 +45,18 @@ from tartare_spark.operators.merge import merge_upserts
 logger = logging.getLogger(__name__)
 
 EVENT_COLS = ["lsn", "op", "repo", "path", "commit", "lang", "content", "ts"]
+
+
+def _typed_events(df: DataFrame) -> DataFrame:
+    """The event columns with the change-event schema's types. Data
+    files must carry the lake's physical schema, which readers pin — a
+    caller's frame may have inferred another type (an all-null pandas
+    column arrives as boolean). Casts to the type a column already has
+    are optimized away."""
+    return df.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name)
+          for f in CHANGE_EVENT_SCHEMA.fields]
+    )
 
 
 def feed_as_changelog(feed: DataFrame) -> DataFrame:
@@ -261,7 +274,7 @@ def apply_batch(
         lake.append_metrics(rec)
         return rec
 
-    ev = events.select(*EVENT_COLS)
+    ev = _typed_events(events)
     fence_stats: dict | None = None
     fence_obs: tuple | None = None
     if lsn_fence == "manifest":
@@ -626,7 +639,7 @@ def bootstrap_load(
         snapshot = snapshot.withColumn("ts", F.lit(None).cast("timestamp"))
     if "lang" not in cols:
         snapshot = snapshot.withColumn("lang", F.lit(None).cast("string"))
-    ev = snapshot.withColumn("op", F.lit("update")).select(*EVENT_COLS)
+    ev = _typed_events(snapshot.withColumn("op", F.lit("update")))
     ev_b = ev.withColumn("_bucket", bucket_expr(lake.num_buckets))
     part = ev_b.repartition(max(lake.num_buckets, 1), "_bucket")
     staged = dedup_latest_lsn(

@@ -28,8 +28,10 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from tartare_spark.operators.apply import _obs_metrics
 
 _SPEC_FILE = "_bucket_spec.json"
 
@@ -201,15 +203,23 @@ def publish_incremental(
         )
         return {"mode": "noop", "version": version, "dirty_partitions": 0}
     snap = _snap().filter(F.col("_pub_part").isin(dirty))
-    snap.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("_pub_part").parquet(out_dir)
     # dynamic overwrite never touches a partition that produced zero
     # rows — a dirty partition whose keys were all tombstoned must be
-    # cleared by hand or the export would retain deleted rows forever
-    live = {
-        int(r[0]) for r in snap.select("_pub_part").distinct().collect()
-    }
+    # cleared by hand or the export would retain deleted rows forever.
+    # The live partition set rides the write job as an observe() metric
+    # (≤ num_parts values) instead of re-running the snapshot after it.
+    obs = Observation()
+    snap.observe(obs, F.collect_set("_pub_part").alias("live")).write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy("_pub_part").parquet(
+        out_dir
+    )
+    live = _obs_metrics(obs).get("live")
+    if live is None:
+        # AQE collapsed an empty snapshot and dropped the metrics row
+        # (see _obs_metrics): recompute, on the rare empty export only
+        live = [r[0] for r in snap.select("_pub_part").distinct().collect()]
+    live = {int(p) for p in live}
     for p_id in dirty:
         if p_id not in live:
             shutil.rmtree(

@@ -47,6 +47,11 @@ def get_spark(
         # INT96 (the default) carries no parquet min/max stats; MICROS
         # enables footer-derived lag metrics and ts predicate pushdown
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # lake reads pass the manifest's leaf FILES, never directories:
+        # past 32 paths (the default) Spark would stat them in a
+        # one-task-per-file listing job (64 files: 64 tasks, ~0.5 s);
+        # a driver-side stat of a listed file is microseconds
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

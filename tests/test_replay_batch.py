@@ -1286,3 +1286,139 @@ def test_rebase_branch_merges_onto_diverged_main(spark, tmp_path):
     rebase_branch(spark, lake2, "feat2", drop_source=True)
     s2 = {r["path"]: r["content"] for r in lake2.snapshot(spark).collect()}
     assert s2["k1"] == "branch-k1" and s2["k11"] == "branch-k11"
+
+
+def _count_jobs(spark, action):
+    """Run ``action`` under a fresh job group; returns (result, number
+    of Spark jobs it launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("root_name", ["lake", "lake dir with space"])
+def test_changes_one_scan_matches_per_commit_feed(
+    spark, unit_events, tmp_path, root_name
+):
+    """changes() over many commits is ONE scan tagged per commit through
+    the files' data directories: it equals the union of the one-commit
+    feeds on every column (incl. _commit_version/_batch_id), across a
+    compaction commit, past Spark's 32-path listing threshold, and with
+    a lake root that needs URI escaping; its job count does not grow
+    with the number of commits."""
+    lake = LakeTable.create(
+        str(tmp_path / root_name), num_buckets=4, compact_every=10_000
+    )
+    cut = unit_events.approxQuantile("lsn", [0.5], 0.0)[0]
+    replay_batches(spark, lake, unit_events.filter(F.col("lsn") <= cut),
+                   num_chunks=6)
+    assert lake.compact(spark, buckets=[0, 1]) == 2  # maintenance commit
+    replay_batches(spark, lake, unit_events.filter(F.col("lsn") > cut),
+                   num_chunks=6, start_batch_id=6)
+    cur = lake.current_version()
+    history = [lake.manifest(v) for v in range(cur + 1)]
+    assert any(m["stats"].get("compaction") for m in history)
+    delta_files = {f for m in history for fl in m["deltas"].values() for f in fl}
+    assert len(delta_files) >= 40
+
+    per_commit = [lake.changes(spark, v - 1, v) for v in range(1, cur + 1)]
+    for v, feed in enumerate(per_commit, start=1):
+        assert {r[0] for r in feed.select("_commit_version").distinct().collect()} \
+            <= {v}
+    expected = per_commit[0]
+    for feed in per_commit[1:]:
+        expected = expected.unionByName(feed)
+    got = lake.changes(spark, 0)
+    assert got.columns == expected.columns
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0
+    assert got.count() == sum(
+        int(m["stats"].get("keys", 0)) for m in history[1:]
+        if not m["stats"].get("compaction")
+    )
+
+    n_all, jobs_all = _count_jobs(spark, lambda: lake.changes(spark, 0).count())
+    n_one, jobs_one = _count_jobs(spark, lambda: lake.changes(spark, 0, 1).count())
+    assert 0 < n_one < n_all
+    assert jobs_all == jobs_one
+
+
+def test_lake_reads_launch_no_inference_job(spark, unit_events, tmp_path):
+    """Snapshot, lookup and scan_where read manifest-listed files with
+    the physical schema pinned: no schema-inference job and, with > 32
+    files, no file-listing job — only the read's own jobs run. The lake
+    has clean (compacted) and dirty (delta-carrying) buckets."""
+    lake = LakeTable.create(
+        str(tmp_path / "lake"), num_buckets=40, compact_every=10_000
+    )
+    replay_batches(spark, lake, unit_events, num_chunks=2)
+    lake.compact(spark)
+    one = unit_events.orderBy(F.col("lsn").desc()).limit(3)
+    apply_batch(spark, lake, one, batch_id=2)
+    m = lake.manifest()
+    dirty = [b for b, fl in m["deltas"].items() if fl]
+    assert 0 < len(dirty) < 40
+    assert sum(len(fl) for fl in m["files"].values()) > 32
+    dirty_key = one.select("repo", "path").collect()[0]
+    clean_b = next(int(b) for b in m["files"] if b not in dirty)
+    clean_key = lake.read_raw(spark, buckets=[clean_b]).first()
+
+    def lookup_jobs(k):
+        return _count_jobs(
+            spark, lambda: lake.lookup(spark, k["repo"], k["path"]).collect()
+        )
+
+    # snapshot: dedup shuffle stage + count's two stages
+    _, snap_jobs = _count_jobs(spark, lambda: lake.snapshot(spark).count())
+    # bucket-id probe + pruned scan (+ dedup shuffle stage when dirty)
+    clean_rows, clean_jobs = lookup_jobs(clean_key)
+    dirty_rows, dirty_jobs = lookup_jobs(dirty_key)
+    _, scan_jobs = _count_jobs(
+        spark,
+        lambda: lake.scan_where(spark, {"repo": ("repo_0000", "repo_0003")}).count(),
+    )
+    assert len(clean_rows) == 1
+    assert (snap_jobs, clean_jobs, dirty_jobs, scan_jobs) == (3, 2, 3, 3)
+
+
+def test_metrics_log_writers_are_serialized(tmp_path):
+    """The foreachBatch thread and the maintenance thread append to the
+    same metrics log through one LakeTable: concurrent appends from more
+    threads than cores leave every line whole and lose no record."""
+    import sys
+    import threading
+
+    lake = LakeTable.create(str(tmp_path / "lake"), num_buckets=2)
+    n_threads, n, pad = 8, 200, "x" * 50_000
+    start = threading.Barrier(n_threads)
+
+    def writer(t):
+        start.wait()
+        for i in range(n):
+            lake.append_metrics({"thread": t, "i": i, "pad": pad})
+
+    threads = [
+        threading.Thread(target=writer, args=(t,)) for t in range(n_threads)
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    recs = lake.metrics()  # json.loads on every line
+    assert sorted((r["thread"], r["i"]) for r in recs) == [
+        (t, i) for t in range(n_threads) for i in range(n)
+    ]
+    assert all(r["pad"] == pad for r in recs)
